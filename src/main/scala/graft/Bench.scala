@@ -3,22 +3,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .getOrCreate()
-    // ERROR, not WARN: each per-query GraftSession re-registers the function
-    // surface, and Spark logs a WARN per replaced function — thousands of stderr
-    // lines that sbt interleaves into the captured output and push the final
-    // summary line out of the driver's 2000-char tail (BENCH_r3–r6 `parsed:
-    // null` all show a tail of SimpleFunctionRegistry WARNs, not the summary).
-    spark.sparkContext.setLogLevel("ERROR")
+    // The factory's ERROR log level matters here: each per-query GraftSession
+    // re-registers the function surface, and Spark logs a WARN per replaced
+    // function — thousands of stderr lines that sbt interleaves into the
+    // captured output and push the final summary line out of the driver's
+    // 2000-char tail (BENCH_r3–r6 `parsed: null` all show a tail of
+    // SimpleFunctionRegistry WARNs, not the summary).
+    val spark = SessionFactory.local()
     // Warm the session (codegen, file listing, shuffle service) outside the timings.
     try {
       spark.sql("select count(*) c from range(1000)").collect()

@@ -102,11 +102,10 @@ private[graft] final class LruCache[K, V](capacity: Int) {
   }
   def put(k: K, v: V): Unit = m.synchronized { m.put(k, v); () }
   def size: Int = m.synchronized(m.size)
-  /** (hits, misses) since construction/reset — the plan-cache hit-rate
-    * evidence PlanProfile reports (round-14 planning-drift adjudication).
+  /** (hits, misses) since construction — the plan-cache hit rate behind the
+    * round-14 planning-drift adjudication (BENCH_TREND.md).
     */
   def stats: (Long, Long) = m.synchronized((hitN, missN))
-  def resetStats(): Unit = m.synchronized { hitN = 0L; missN = 0L }
 }
 
 object GraftSession {
@@ -262,9 +261,8 @@ final class GraftSession(
 
   private val planCache = new LruCache[(String, Option[Int], String), CachedPlan](256)
 
-  /** (hits, misses) of the per-session plan cache — PlanProfile evidence. */
+  /** (hits, misses) of the per-session plan cache since deploy. */
   def planCacheStats: (Long, Long) = planCache.stats
-  def resetPlanCacheStats(): Unit = planCache.resetStats()
 
   /** False when any expression (subqueries included) is non-deterministic or bound
     * to query-submission time — the set the optimizer's ComputeCurrentTime /

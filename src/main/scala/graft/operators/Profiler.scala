@@ -25,10 +25,13 @@ import org.apache.spark.sql.types.NumericType
   * Expand that replicated every input row k+1 times into a multi-key
   * SortAggregate — q28 measured 8.2 s warm at sf0.1 (single-split scan → one
   * task sorting 3M rows) and, at a 10x corpus, 103 MB shuffled vs the split
-  * shape's 70 MB with a 2.5x smaller peak stage (tools.ProfileShapes). Each
-  * column is scanned twice (stats + distinct), but columnar pruning keeps that
-  * to the column's own bytes — the exchange, not the scan, is what dies at
-  * 100 TB (guide §2.3).
+  * shape's 70 MB with a 2.5x smaller peak stage (OPTIMIZATION_r16.md §8,
+  * plans `plans/r16/q28_profile_{before,after}.txt`). Each column is scanned
+  * twice (stats + distinct), but columnar pruning keeps that to the column's
+  * own bytes — the exchange, not the scan, is what dies at 100 TB (guide §2.3).
+  * Because of those two scans, `exactDistinct` assumes a stable batch source:
+  * a source that changes between the scans can pair one column's stats with
+  * another snapshot's distinct count.
   */
 object Profiler {
 

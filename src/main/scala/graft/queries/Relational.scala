@@ -64,6 +64,10 @@ object Relational {
   // money → exact decimal
   private def dec(c: String) = s"cast($c as decimal(18,2))"
 
+  /** The lineitem columns `q28_profile` profiles (all numeric but the flag). */
+  val q28ProfileColumns: Seq[String] =
+    Seq("l_quantity", "l_extendedprice", "l_orderkey", "l_returnflag")
+
   val defs: Seq[(String, ((SparkSession, String) => DataFrame, String))] = Seq(
 
     // --- aggregation: TPC-H Q1 shape (group-by + multi-agg + filter) ---
@@ -489,8 +493,7 @@ object Relational {
     "q28_profile" -> (((s: SparkSession, dir: String) => {
       import org.apache.spark.sql.functions.col
       graft.operators.Profiler.profile(
-          s.read.parquet(s"$dir/lineitem.parquet"),
-          Seq("l_quantity", "l_extendedprice", "l_orderkey", "l_returnflag"),
+          s.read.parquet(s"$dir/lineitem.parquet"), q28ProfileColumns,
           exactDistinct = true)
         .select(col("column").alias("column_name"), col("n_rows"), col("n_nulls"),
           col("n_distinct"), col("min_value"), col("max_value"), col("mean_value"))
@@ -507,8 +510,7 @@ object Relational {
            |  $mean AS mean_value
            |FROM lineitem""".stripMargin
       }
-      Seq(prof("l_quantity", true), prof("l_extendedprice", true),
-        prof("l_orderkey", true), prof("l_returnflag", false))
+      q28ProfileColumns.map(c => prof(c, numeric = c != "l_returnflag"))
         .mkString("", "\nUNION ALL\n", "\nORDER BY column_name")
     })),
 

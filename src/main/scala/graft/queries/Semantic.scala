@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.GraftEngine
+import graft.{GraftEngine, SessionFactory}
 import graft.mdl._
 
 /** Semantic-layer operators (SURVEY.md §2.A) exercised end-to-end: each query deploys
@@ -973,13 +973,8 @@ object Semantic {
     * smallest SF).
     */
   def pgUnparseOracles: Map[String, String] = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val session = GraftEngine.deployOnDir(spark, manifest, "/root/testdata/sf0.001")
+    val session = GraftEngine.deployOnDir(
+      SessionFactory.activeOrLocal(), manifest, "/root/testdata/sf0.001")
     val live = crossCorpus.flatMap { case (n, d, sql) =>
       try Some(n -> session.transformSql(sql, d))
       catch { case e: Exception =>

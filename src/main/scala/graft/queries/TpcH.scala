@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.GraftEngine
+import graft.{GraftEngine, SessionFactory}
 import graft.mdl._
 
 /** TPC-H q1–q22 through the semantic layer, mirroring the reference's own TPC-H
@@ -403,22 +403,23 @@ object TpcH {
     // EXISTS + NOT-EXISTS double self-join: lineitem⨝orders is scanned ONCE
     // into per-(order, supplier) lateness rows, and the two correlated
     // subqueries collapse into one per-order supplier-count aggregate.
-    // Equivalence (Q21Shapes hash-verified at 1×/10×/30×): for a late l1 row,
-    // EXISTS(other supplier in the order) ⟺ the order has >= 2 distinct
-    // suppliers, and NOT EXISTS(other LATE supplier) ⟺ the order's distinct
-    // late-supplier set is exactly {l1.l_suppkey} ⟺ nlate = 1 (l1 itself is
-    // late); l2/l3 ranged over the same o_orderkey, necessarily l1's F-status
-    // order, so pre-filtering the aggregate to F orders drops nothing l1 can
-    // see. The distinct counts are spelled as a TWO-LEVEL aggregate (dedupe
-    // per (order, supplier) keeping max lateness, then plain count/sum) — no
-    // DISTINCT aggregate, so no Expand row doubling AND a deterministic
-    // unparse (Spark's multi-distinct rewrite orders its Expand projections
-    // by expression id, which drifts across sessions and broke the golden
-    // pin). Scale A/B of this exact text vs the EXISTS form (Q21Shapes,
-    // medians across two probe runs on a noisy box; shuffle bytes are
-    // deterministic): 1× 1.06 vs 1.10–1.25 s, 10× 4.29 vs 4.87–15.89 s
-    // (shuffle 102 vs 489 MB), 30× 4.61–7.67 vs 6.26–20.92 s (1165 vs
-    // 1519 MB) — three lineitem roles vs one; the rewrite wins every decade.
+    // Equivalence (row hashes compared at 1×/10×/30×, OPTIMIZATION_r16.md
+    // §3): for a late l1 row, EXISTS(other supplier in the order) ⟺ the order
+    // has >= 2 distinct suppliers, and NOT EXISTS(other LATE supplier) ⟺ the
+    // order's distinct late-supplier set is exactly {l1.l_suppkey} ⟺ nlate = 1
+    // (l1 itself is late); l2/l3 ranged over the same o_orderkey, necessarily
+    // l1's F-status order, so pre-filtering the aggregate to F orders drops
+    // nothing l1 can see. The distinct counts are spelled as a TWO-LEVEL
+    // aggregate (dedupe per (order, supplier) keeping max lateness, then plain
+    // count/sum) — no DISTINCT aggregate, so no Expand row doubling AND a
+    // deterministic unparse (Spark's multi-distinct rewrite orders its Expand
+    // projections by expression id, which drifts across sessions and broke the
+    // golden pin). Scale A/B of this exact text vs the EXISTS form
+    // (OPTIMIZATION_r16.md §3, plans/r16/tpch_q21_{before,after}.txt; medians
+    // across two probe runs on a noisy box; shuffle bytes are deterministic):
+    // 1× 1.06 vs 1.10–1.25 s, 10× 4.29 vs 4.87–15.89 s (shuffle 102 vs
+    // 489 MB), 30× 4.61–7.67 vs 6.26–20.92 s (1165 vs 1519 MB) — three
+    // lineitem roles vs one; the rewrite wins every decade.
     "tpch_q21" -> common(
       s"""WITH lo AS (
          |  SELECT l_orderkey, l_suppkey,
@@ -487,15 +488,11 @@ object TpcH {
     * the text to whatever SF it verifies at. A query the dialect cannot express
     * is OMITTED (driver falls back to a rows-only check) and logged — and
     * SqlUnparserTpchSpec fails, so a coverage regression cannot land silently.
+    * Planning borrows the caller's session and leaves its conf alone.
     */
   def unparseOracles: Map[String, String] = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val session = GraftEngine.deployOnDir(spark, manifest, "/root/testdata/sf0.001")
+    val session = GraftEngine.deployOnDir(
+      SessionFactory.activeOrLocal(), manifest, "/root/testdata/sf0.001")
     defs.flatMap { case (n, (_, sql)) =>
       try Some(s"${n}_unparse" -> session.transformSql(sql, "duckdb"))
       catch { case e: Exception =>
@@ -539,13 +536,8 @@ object TpcH {
       yield s"${n}_translit_$d" -> fn).toMap
 
   def translitOracles: Map[String, String] = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val session = GraftEngine.deployOnDir(spark, manifest, "/root/testdata/sf0.001")
+    val session = GraftEngine.deployOnDir(
+      SessionFactory.activeOrLocal(), manifest, "/root/testdata/sf0.001")
     (for ((n, (_, sql)) <- defs; d <- translitDialects
           if !translitSkip((n, d)))
       yield

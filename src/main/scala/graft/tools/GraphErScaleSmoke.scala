@@ -1,9 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
+import graft.tools.Smoke.{decade, mb, salted}
 
 /** 10× decade for the round-13 families: integer PageRank (g1) and blocked
   * fuzzy entity resolution (er1/er2), at FIXED 32 partitions — the same
@@ -14,7 +15,7 @@ import graft.SparkEntry
   *   - events ×10 with per-copy user_id shifts AND salted event_type — groups
   *     stay copy-local, so the interaction graph gains 10× nodes, 10× stars,
   *     10× edges (disjoint components, the honest "bigger graph" shape).
-  *   - documents ×10 with the ScaleSmoke word-salt — entity names stay
+  *   - documents ×10 with the [[Smoke.salted]] word-salt — entity names stay
   *     distinct across copies, so token blocks multiply in COUNT while block
   *     SIZE stays set by the fixture's duplication rate (the property the
   *     blocking design rests on).
@@ -24,26 +25,12 @@ import graft.SparkEntry
   */
 object GraphErScaleSmoke {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt
     // partition count scales WITH the decade (32 at 10×, 96 at 30× — the
     // dedup-decade protocol), so the claim under test is per-PARTITION
     // flatness, the quantity that decides executor memory on a real cluster
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SCALE_PARTITIONS", "32").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val meter = new SmokeMeter
-    spark.sparkContext.addSparkListener(meter)
-    val work = java.nio.file.Files.createTempDirectory("graft_gescale_").toString
+    val smoke = new Smoke("graft_gescale_",
+      sys.env.getOrElse("SPARK_GRAFT_SCALE_PARTITIONS", "32").toInt)
+    import smoke.{copies, partitions => parts, runs, sfDir, spark, work}
 
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
     def evCopy(k: Int): DataFrame =
@@ -53,43 +40,18 @@ object GraphErScaleSmoke {
         .withColumn("event_type", concat(col("event_type"), lit("_x" + k)))
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    def docCopy(k: Int): DataFrame =
-      if (k == 0) docs
-      else docs.select((col("doc_id") + k * 900000L).alias("doc_id"),
-        regexp_replace(lower(col("text")), "([a-z0-9一-鿿]+)", "$1xx" + k)
-          .alias("text"))
 
-    def write(name: String, file: String, df: DataFrame): String = {
-      val dir = s"$work/$name"
-      df.repartition(parts).write.parquet(s"$dir/$file")
-      dir
-    }
-    val ev1 = write("ev1", "events.parquet", evCopy(0))
-    val ev10 = write("ev10", "events.parquet",
-      (0 until copies).map(evCopy).reduce(_ union _))
-    val doc1 = write("doc1", "documents.parquet", docCopy(0))
-    val x10 = (0 until copies).map(docCopy).reduce(_ union _)
-    val doc10 = write("doc10", "documents.parquet", x10)
+    val ev1 = smoke.corpus("ev1", evCopy(0), "events.parquet")
+    val ev10 = smoke.corpus("ev10",
+      (0 until copies).map(evCopy).reduce(_ union _), "events.parquet")
+    val doc1 = smoke.corpus("doc1", docs)
+    val x10 = (0 until copies).map(salted(docs, _)).reduce(_ union _)
+    val doc10 = smoke.corpus("doc10", x10)
     // skew: every 3rd doc's text gains a leading shared token, which lands in
     // the name's 6-word prefix and forms ONE corpus-sized block
-    val skew10 = write("skew10", "documents.parquet",
+    val skew10 = smoke.corpus("skew10",
       x10.withColumn("text", when(pmod(col("doc_id"), lit(3)) === 0,
         concat(lit("inc "), col("text"))).otherwise(col("text"))))
-
-    def runQ(name: String, dir: String): (Double, Long, Long, Long) = {
-      var best = Double.MaxValue; var rows = 0L; var shuffle = 0L; var peak = 0L
-      for (_ <- 0 until runs) {
-        spark.catalog.clearCache()
-        meter.reset()
-        val t0 = System.nanoTime()
-        rows = SparkEntry.queries(name)(spark, dir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-        if (dt < best) { best = dt; shuffle = meter.total.get; peak = meter.peak.get }
-      }
-      (best, rows, shuffle, peak)
-    }
-    def mb(b: Long): String = f"${b / 1e6}%.1f"
 
     val probes = Seq(
       ("g1_pagerank", ev1, ev10),
@@ -97,29 +59,20 @@ object GraphErScaleSmoke {
       ("er2_entity_canonical", doc1, doc10),
       ("er1_fuzzy_pairs[skew10: planted hot token]", doc10, skew10))
     // warm codegen/JIT before any timed run: ONE untimed execution per family
-    // (the timed loop below re-runs; a full runQ here would double the 1x cost)
+    // (the timed loop below re-runs; a full best-of here would double the 1x cost)
     probes.take(3).foreach { case (n, d1, _) =>
       SparkEntry.queries(n)(spark, d1).count()
     }
 
     val results = probes.map { case (label, d1, d10) =>
       val name = label.takeWhile(_ != '[')
-      val (t1, r1, s1, p1) = runQ(name, d1)
-      val (t10, r10, s10, p10) = runQ(name, d10)
-      val row = Map(
-        "query" -> label, "t1_sec" -> f"$t1%.2f", "t10_sec" -> f"$t10%.2f",
-        "wall_factor" -> f"${t10 / t1}%.1f",
-        "rows1" -> r1.toString, "rows10" -> r10.toString,
-        "shuffle1_mb" -> mb(s1), "shuffle10_mb" -> mb(s10),
-        "peak_stage1_mb" -> mb(p1), "peak_stage10_mb" -> mb(p10),
-        "shuffle_factor" -> (if (s1 > 0) f"${s10.toDouble / s1}%.1f" else "-"))
+      val row = decade(label, smoke.entry(name, d1), smoke.entry(name, d10))
       println(s"[scale] $label 1x=${row("t1_sec")}s 10x=${row("t10_sec")}s " +
-        s"factor=${row("wall_factor")} rows $r1->$r10 " +
+        s"factor=${row("wall_factor")} rows ${row("rows1")}->${row("rows10")} " +
         s"shuffle ${row("shuffle1_mb")}->${row("shuffle10_mb")} MB " +
         s"peak ${row("peak_stage1_mb")}->${row("peak_stage10_mb")} MB")
       row
     }
-
     // ---- bucketed-edge probe (round-14 stretch): rankLoop's scaladoc
     // prescribes bucket-by-src edges on clusters so per-iteration shuffles
     // move only rank rows. Measure it: pageRank over the 10× interaction
@@ -146,16 +99,9 @@ object GraphErScaleSmoke {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
         try {
-          var best = Double.MaxValue; var shuffle = 0L; var rows = 0L
-          for (_ <- 0 to runs) { // extra first pass = warm, still measured-best
-            spark.catalog.clearCache()
-            meter.reset()
-            val t0 = System.nanoTime()
-            rows = GraphOps.pageRank(e, iterations = 4).count()
-            val dt = (System.nanoTime() - t0) / 1e9
-            org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-            if (dt < best) { best = dt; shuffle = meter.total.get }
-          }
+          // extra first pass = warm, still measured-best
+          val (best, rows, shuffle, _) =
+            smoke.best(() => GraphOps.pageRank(e, iterations = 4), runs + 1)
           Map("query" -> s"g1_rankloop_10x[$label]", "t10_sec" -> f"$best%.2f",
             "rows10" -> rows.toString, "shuffle10_mb" -> mb(shuffle))
         } finally {
@@ -175,17 +121,9 @@ object GraphErScaleSmoke {
       Seq(f, bk)
     }
 
-    val json = (results ++ bucketRows).map(_.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-        .mkString("{", ",", "}"))
-      .mkString(
-        s"""{"sf":"$sfDir","copies":$copies,"partitions":$parts,"results":[""",
-        ",", "]}")
     val outName = if (copies == 10) "graph_er_scale_smoke.json"
       else s"graph_er_scale_smoke_${copies}x.json"
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outName), json.getBytes("UTF-8"))
-    println(json)
-    graft.util.Fs.deleteTree(work)
-    spark.stop()
+    smoke.finish(outName, s""""sf":"$sfDir","copies":$copies,"partitions":$parts""",
+      results ++ bucketRows)
   }
 }

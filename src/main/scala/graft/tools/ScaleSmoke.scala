@@ -1,10 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkEntry
 import graft.operators.Dedup
+import graft.tools.Smoke.{decade, mb, salted}
 
 /** 10× scale smoke for the dedup/curation flagships (d2, d4, d13, d9, p7).
   *
@@ -12,12 +12,11 @@ import graft.operators.Dedup
   * this main measures how the flagship operators SCALE by synthesizing a 10×
   * corpus from the same fixture and running each query end-to-end at both sizes:
   *
-  *   - `plain ×10`: ten salted copies of `documents.parquet`. Copy k shifts
-  *     `doc_id` by `k·900000` (divisible by every modulus the queries plant
-  *     with: 3, 20, 25, 40, 50 — so planted excerpts/copies replicate exactly
-  *     per copy) and suffixes every word with `xx$k`, so copies are
-  *     word-structure-identical but share NO shingles — near-dup pair structure
-  *     is exactly 10× the 1× corpus's, making wall-time scaling interpretable.
+  *   - `plain ×10`: ten [[Smoke.salted]] copies of `documents.parquet` —
+  *     planted excerpts/copies replicate exactly per copy, and copies are
+  *     word-structure-identical but share NO shingles, so near-dup pair
+  *     structure is exactly 10× the 1× corpus's, making wall-time scaling
+  *     interpretable.
   *   - `skew ×1` / `skew ×10`: the same corpora with an UNSALTED boilerplate
   *     sentence appended to every third document. Its shingle document
   *     frequency grows with the corpus (~1.7k at 1×, ~17k at 10× — both past
@@ -48,48 +47,20 @@ object ScaleSmoke {
     "service apply all rights reserved contact us today"
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val meter = new SmokeMeter
-    spark.sparkContext.addSparkListener(meter)
-
-    val work = java.nio.file.Files.createTempDirectory("graft_scale_").toString
+    val smoke = new Smoke("graft_scale_")
+    import smoke.{copies, meter, sfDir, spark, work}
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-
-    // Copy k: ids shifted by a multiple of lcm-friendly 900000, every word
-    // salted with xx$k ("xx" so no salted token collides with d13's planted
-    // zq* suffix tokens). Copy 0 is the fixture verbatim.
-    def salted(k: Int): DataFrame =
-      if (k == 0) base
-      else base.select((col("doc_id") + k * 900000L).alias("doc_id"),
-        regexp_replace(lower(col("text")), "([a-z0-9一-鿿]+)", "$1xx" + k)
-          .alias("text"))
+    def copiesOf(n: Int): DataFrame = (0 until n).map(salted(base, _)).reduce(_ union _)
     def skewed(df: DataFrame): DataFrame =
       df.withColumn("text", when(pmod(col("doc_id"), lit(3)) === 0,
         concat(col("text"), lit(" " + boiler))).otherwise(col("text")))
 
-    def writeCorpus(name: String, df: DataFrame, parts: Int = 32): String = {
-      val dir = s"$work/$name"
-      df.repartition(parts).write.parquet(s"$dir/documents.parquet")
-      dir
-    }
-    val x10 = (0 until copies).map(salted).reduce(_ union _)
-    val plain1 = writeCorpus("plain1", base)
-    val plain10 = writeCorpus("plain10", x10)
-    val skew1 = writeCorpus("skew1", skewed(base))
-    val skew10 = writeCorpus("skew10", skewed(x10))
+    val x10 = copiesOf(copies)
+    val plain1 = smoke.corpus("plain1", base)
+    val plain10 = smoke.corpus("plain10", x10)
+    val skew1 = smoke.corpus("skew1", skewed(base))
+    val skew10 = smoke.corpus("skew10", skewed(x10))
 
     // (query, 1x corpus, 10x corpus): minhash-family on plain, df-dispatch
     // family on skew (scaladoc above).
@@ -100,27 +71,8 @@ object ScaleSmoke {
       ("d4_ngram_jaccard", skew1, skew10),
       ("d13_containment", skew1, skew10))
 
-    def runDf(thunk: () => DataFrame): (Double, Long, Long, Long) = {
-      var best = Double.MaxValue; var rows = 0L
-      var shuffle = 0L; var peak = 0L
-      for (_ <- 0 until runs) {
-        spark.catalog.clearCache()
-        meter.reset()
-        val t0 = System.nanoTime()
-        rows = thunk().count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-        if (dt < best) { best = dt; shuffle = meter.total.get; peak = meter.peak.get }
-      }
-      (best, rows, shuffle, peak)
-    }
-    def run(name: String, dir: String): (Double, Long, Long, Long) =
-      runDf(() => SparkEntry.queries(name)(spark, dir))
-
     // Warm codegen/JIT on the small corpus before any timed run.
-    suites.foreach { case (n, d1, _) => run(n, d1) }
-
-    def mb(b: Long): String = f"${b / 1e6}%.1f"
+    suites.foreach { case (n, d1, _) => smoke.entry(n, d1) }
 
     // ---- optional 100× FOURTH decade for the df-dispatch family -----------
     // `SPARK_GRAFT_SCALE_100X=1` runs ONLY this probe (the q18/q21 and
@@ -131,21 +83,19 @@ object ScaleSmoke {
     // maxDocFreq cap, where a capped inverted index would be quadratic.
     if (sys.env.get("SPARK_GRAFT_SCALE_100X").contains("1")) {
       val names = Seq("d4_ngram_jaccard", "d13_containment")
-      names.foreach(n => run(n, skew1)) // codegen/JIT warm on the 1× corpus
-      val skew30 = writeCorpus("skew30",
-        skewed((0 until 3 * copies).map(salted).reduce(_ union _)), parts = 96)
-      val skew100 = writeCorpus("skew100",
-        skewed((0 until 10 * copies).map(salted).reduce(_ union _)), parts = 320)
+      names.foreach(n => smoke.entry(n, skew1)) // codegen/JIT warm on the 1× corpus
+      val skew30 = smoke.corpus("skew30", skewed(copiesOf(3 * copies)), parts = 96)
+      val skew100 = smoke.corpus("skew100", skewed(copiesOf(10 * copies)), parts = 320)
       val rows = names.map { name =>
         val key = if (name == "d13_containment") "containment" else "jaccard"
         spark.conf.set("spark.sql.shuffle.partitions", "96")
         val (t30, r30, s30, p30) =
-          try run(name, skew30)
+          try smoke.entry(name, skew30)
           finally spark.conf.set("spark.sql.shuffle.partitions", "32")
         val d30 = Option(Dedup.lastDispatch.get(key)).getOrElse("-")
         spark.conf.set("spark.sql.shuffle.partitions", "320")
         val (t100, r100, s100, p100) =
-          try run(name, skew100)
+          try smoke.entry(name, skew100)
           finally spark.conf.set("spark.sql.shuffle.partitions", "32")
         val d100 = Option(Dedup.lastDispatch.get(key)).getOrElse("-")
         val row = Map(
@@ -165,38 +115,22 @@ object ScaleSmoke {
           s"dispatch ${d30}->${d100}")
         row
       }
-      val json = rows.map(r => r.map { case (k, v) =>
-        "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}"))
-        .mkString(
-          s"""{"sf":"$sfDir","copies":$copies,"mode":"100x","results":[""",
-          ",", "]}")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("dedup_scale_smoke_100x.json"),
-        json.getBytes("UTF-8"))
-      println(json)
-      graft.util.Fs.deleteTree(work)
-      spark.stop()
+      smoke.finish("dedup_scale_smoke_100x.json",
+        s""""sf":"$sfDir","copies":$copies,"mode":"100x"""", rows)
       return
     }
 
     val results = suites.map { case (name, d1, d10) =>
-      val (t1, r1, s1, p1) = run(name, d1)
-      val dispatch1 = Option(Dedup.lastDispatch.get(
-        if (name == "d13_containment") "containment" else "jaccard")).getOrElse("-")
-      val (t10, r10, s10, p10) = run(name, d10)
-      val dispatch10 = Option(Dedup.lastDispatch.get(
-        if (name == "d13_containment") "containment" else "jaccard")).getOrElse("-")
-      val row = Map(
-        "query" -> name, "t1_sec" -> f"$t1%.2f", "t10_sec" -> f"$t10%.2f",
-        "wall_factor" -> f"${t10 / t1}%.1f",
-        "rows1" -> r1.toString, "rows10" -> r10.toString,
-        "shuffle1_mb" -> mb(s1), "shuffle10_mb" -> mb(s10),
-        "peak_stage1_mb" -> mb(p1), "peak_stage10_mb" -> mb(p10),
-        "shuffle_factor" -> (if (s1 > 0) f"${s10.toDouble / s1}%.1f" else "-"),
-        "dispatch1" -> (if (name.startsWith("d4") || name.startsWith("d13")) dispatch1 else "-"),
-        "dispatch10" -> (if (name.startsWith("d4") || name.startsWith("d13")) dispatch10 else "-"))
+      val key = if (name == "d13_containment") "containment" else "jaccard"
+      val dispatched = name.startsWith("d4") || name.startsWith("d13")
+      def dispatch(): String =
+        if (dispatched) Option(Dedup.lastDispatch.get(key)).getOrElse("-") else "-"
+      val a = smoke.entry(name, d1)
+      val dispatch1 = dispatch()
+      val row = decade(name, a, smoke.entry(name, d10)) ++
+        Map("dispatch1" -> dispatch1, "dispatch10" -> dispatch())
       println(s"[scale] $name 1x=${row("t1_sec")}s 10x=${row("t10_sec")}s " +
-        s"factor=${row("wall_factor")} rows ${r1}->${r10} " +
+        s"factor=${row("wall_factor")} rows ${row("rows1")}->${row("rows10")} " +
         s"shuffle ${row("shuffle1_mb")}->${row("shuffle10_mb")} MB " +
         s"dispatch ${row("dispatch1")}->${row("dispatch10")}")
       row
@@ -211,26 +145,19 @@ object ScaleSmoke {
     // (within ~2× of the 10× figure), i.e. executor memory pressure is set by
     // the slice size, not the corpus size.
     val skewResults30 = {
-      val skew30 = writeCorpus("skew30",
-        skewed((0 until 3 * copies).map(salted).reduce(_ union _)), parts = 96)
+      val skew30 = smoke.corpus("skew30", skewed(copiesOf(3 * copies)), parts = 96)
       Seq("d4_ngram_jaccard", "d13_containment").map { name =>
         val key = if (name == "d13_containment") "containment" else "jaccard"
-        val (t10, r10, s10, p10) = run(name, skew10) // 10× at 32 partitions
+        val (t10, r10, s10, p10) = smoke.entry(name, skew10) // 10× at 32 partitions
         val d10 = Option(Dedup.lastDispatch.get(key)).getOrElse("-")
         spark.conf.set("spark.sql.shuffle.partitions", "96")
         val (t30, r30, s30, p30) =
-          try run(name, skew30)
+          try smoke.entry(name, skew30)
           finally spark.conf.set("spark.sql.shuffle.partitions", "32")
         val d30 = Option(Dedup.lastDispatch.get(key)).getOrElse("-")
-        val row = Map(
-          "query" -> s"$name[10x/32p -> 30x/96p]",
-          "t1_sec" -> f"$t10%.2f", "t10_sec" -> f"$t30%.2f",
-          "wall_factor" -> f"${t30 / t10}%.1f",
-          "rows1" -> r10.toString, "rows10" -> r30.toString,
-          "shuffle1_mb" -> mb(s10), "shuffle10_mb" -> mb(s30),
-          "peak_stage1_mb" -> mb(p10), "peak_stage10_mb" -> mb(p30),
+        val row = decade(s"$name[10x/32p -> 30x/96p]",
+          (t10, r10, s10, p10), (t30, r30, s30, p30)) ++ Map(
           "peak_per_part1_mb" -> mb(p10 / 32), "peak_per_part10_mb" -> mb(p30 / 96),
-          "shuffle_factor" -> (if (s10 > 0) f"${s30.toDouble / s10}%.1f" else "-"),
           "dispatch1" -> d10, "dispatch10" -> d30)
         println(s"[scale] ${row("query")} 10x=${row("t1_sec")}s 30x=${row("t10_sec")}s " +
           s"factor=${row("wall_factor")} rows ${r10}->${r30} " +
@@ -261,11 +188,11 @@ object ScaleSmoke {
         Dedup.minHashNearDup(d, "text", "doc_id",
           n = 3, k = 32, bands = 16, threshold = 0.7).select(col("id_a"), col("id_b"))
       }
-      run("p12_leakage_split", plain1) // warm
+      smoke.entry("p12_leakage_split", plain1) // warm
       def probe(name: String, dir: String, forceDistributed: Boolean) = {
         val (t, r, s, p) =
-          if (!forceDistributed) run("p12_leakage_split", dir)
-          else runDf(() =>
+          if (!forceDistributed) smoke.entry("p12_leakage_split", dir)
+          else smoke.best(() =>
             Curation.connectedComponents(pairsOf(dir), localSolveMax = 0))
         val cc = Option(Curation.lastDispatch.get("cc")).getOrElse("-")
         Map(
@@ -348,47 +275,29 @@ object ScaleSmoke {
       else evBase
         .withColumn("user_id", col("user_id") + k * 10000000L)
         .withColumn("event_id", col("event_id") + k * 1000000000L)
-    val evt1 = s"$work/evt1"
-    val evt10 = s"$work/evt10"
-    evBase.repartition(32).write.parquet(s"$evt1/events.parquet")
-    (0 until copies).map(evCopy).reduce(_ union _)
-      .repartition(32).write.parquet(s"$evt10/events.parquet")
+    val evt1 = smoke.corpus("evt1", evBase, "events.parquet")
+    val evt10 = smoke.corpus("evt10",
+      (0 until copies).map(evCopy).reduce(_ union _), "events.parquet")
     val eventSuites = Seq(
       ("e1_sessionize", evt1, evt10),
       ("e6_asof_join", evt1, evt10))
 
-    eventSuites.foreach { case (n, d1, _) => run(n, d1) } // warm codegen/JIT
+    eventSuites.foreach { case (n, d1, _) => smoke.entry(n, d1) } // warm codegen/JIT
     val eventResults = eventSuites.map { case (name, d1, d10) =>
-      val (t1, r1, s1, p1) = run(name, d1)
-      val (t10, r10, s10, p10) = run(name, d10)
-      val row = Map(
-        "query" -> name, "t1_sec" -> f"$t1%.2f", "t10_sec" -> f"$t10%.2f",
-        "wall_factor" -> f"${t10 / t1}%.1f",
-        "rows1" -> r1.toString, "rows10" -> r10.toString,
-        "shuffle1_mb" -> mb(s1), "shuffle10_mb" -> mb(s10),
-        "peak_stage1_mb" -> mb(p1), "peak_stage10_mb" -> mb(p10),
-        "shuffle_factor" -> (if (s1 > 0) f"${s10.toDouble / s1}%.1f" else "-"),
-        "dispatch1" -> "-", "dispatch10" -> "-")
+      val row = decade(name, smoke.entry(name, d1), smoke.entry(name, d10)) ++
+        Map("dispatch1" -> "-", "dispatch10" -> "-")
       println(s"[scale] $name 1x=${row("t1_sec")}s 10x=${row("t10_sec")}s " +
-        s"factor=${row("wall_factor")} rows ${r1}->${r10} " +
+        s"factor=${row("wall_factor")} rows ${row("rows1")}->${row("rows10")} " +
         s"shuffle ${row("shuffle1_mb")}->${row("shuffle10_mb")} MB")
       row
     }
 
-    annSuites.foreach { case (_, t1, _) => runDf(t1) } // warm codegen/JIT
+    annSuites.foreach { case (_, t1, _) => smoke.best(t1) } // warm codegen/JIT
     val annResults = annSuites.map { case (name, th1, th10) =>
-      val (t1, r1, s1, p1) = runDf(th1)
-      val (t10, r10, s10, p10) = runDf(th10)
-      val row = Map(
-        "query" -> name, "t1_sec" -> f"$t1%.2f", "t10_sec" -> f"$t10%.2f",
-        "wall_factor" -> f"${t10 / t1}%.1f",
-        "rows1" -> r1.toString, "rows10" -> r10.toString,
-        "shuffle1_mb" -> mb(s1), "shuffle10_mb" -> mb(s10),
-        "peak_stage1_mb" -> mb(p1), "peak_stage10_mb" -> mb(p10),
-        "shuffle_factor" -> (if (s1 > 0) f"${s10.toDouble / s1}%.1f" else "-"),
-        "dispatch1" -> "-", "dispatch10" -> "-")
+      val row = decade(name, smoke.best(th1), smoke.best(th10)) ++
+        Map("dispatch1" -> "-", "dispatch10" -> "-")
       println(s"[scale] $name 1x=${row("t1_sec")}s 10x=${row("t10_sec")}s " +
-        s"factor=${row("wall_factor")} rows ${r1}->${r10} " +
+        s"factor=${row("wall_factor")} rows ${row("rows1")}->${row("rows10")} " +
         s"shuffle ${row("shuffle1_mb")}->${row("shuffle10_mb")} MB")
       row
     }
@@ -425,28 +334,21 @@ object ScaleSmoke {
       val z10 = prep(evt10, 320, "10")
       val box = Map("ub" -> (16.0, 31.0), "tb" -> (16.0, 31.0))
       val filt = col("ub").between(16, 31) && col("tb").between(16, 31)
-      def probe(path: String): (Double, Long, Long, Long, Int, Int) = {
+      def probe(path: String): (Smoke.Timing, Int, Int) = {
         // same SmokeMeter protocol as every other row — measured, not assumed
-        val (best, rows, shuffle, peak) =
-          runDf(() => ScaleLayout.readPruned(spark, path, box).filter(filt))
+        val t = smoke.best(() => ScaleLayout.readPruned(spark, path, box).filter(filt))
         val (k, tot) = ScaleLayout.lastPruneFor(path).get
-        (best, rows, shuffle, peak, k, tot)
+        (t, k, tot)
       }
       probe(z1) // warm
-      val (t1, r1, s1, p1, k1, tot1) = probe(z1)
-      val (t10, r10, s10, p10, k10, tot10) = probe(z10)
-      val row = Map(
-        "query" -> "zorder_pruned_box_read",
-        "t1_sec" -> f"$t1%.2f", "t10_sec" -> f"$t10%.2f",
-        "wall_factor" -> f"${t10 / t1}%.1f",
-        "rows1" -> r1.toString, "rows10" -> r10.toString,
-        "shuffle1_mb" -> mb(s1), "shuffle10_mb" -> mb(s10),
-        "peak_stage1_mb" -> mb(p1), "peak_stage10_mb" -> mb(p10),
-        "shuffle_factor" -> (if (s1 > 0) f"${s10.toDouble / s1}%.1f" else "-"),
+      val (a, k1, tot1) = probe(z1)
+      val (b, k10, tot10) = probe(z10)
+      val row = decade("zorder_pruned_box_read", a, b) ++ Map(
         "dispatch1" -> s"kept $k1/$tot1 files",
         "dispatch10" -> s"kept $k10/$tot10 files")
       println(s"[scale] zorder_pruned_box_read 1x=${row("t1_sec")}s " +
-        s"10x=${row("t10_sec")}s factor=${row("wall_factor")} rows $r1->$r10 " +
+        s"10x=${row("t10_sec")}s factor=${row("wall_factor")} " +
+        s"rows ${row("rows1")}->${row("rows10")} " +
         s"pruned ${row("dispatch1")} -> ${row("dispatch10")}")
       Seq(row)
     }
@@ -474,22 +376,15 @@ object ScaleSmoke {
         Dedup.hammingNearDup(Multimodal.perceptualHash(
           Multimodal.attachTexturedImagePayload(mediaIds(dir), "doc_id",
             groupMod = groupMod)), bits = 64, maxHamming = 3)
-      runDf(neardup(plain1, 101)) // warm
-      val (t1, r1, s1, p1) = runDf(neardup(plain1, 101))
-      val (t10, r10, s10, p10) = runDf(neardup(plain10, 1010))
-      val mm6Row = Map(
-        "query" -> "mm6_image_neardup[groupMod 101->1010]",
-        "t1_sec" -> f"$t1%.2f", "t10_sec" -> f"$t10%.2f",
-        "wall_factor" -> f"${t10 / t1}%.1f",
-        "rows1" -> r1.toString, "rows10" -> r10.toString,
-        "shuffle1_mb" -> mb(s1), "shuffle10_mb" -> mb(s10),
-        "peak_stage1_mb" -> mb(p1), "peak_stage10_mb" -> mb(p10),
-        "peak_per_part1_mb" -> mb(p1 / 32), "peak_per_part10_mb" -> mb(p10 / 32),
-        "shuffle_factor" -> (if (s1 > 0) f"${s10.toDouble / s1}%.1f" else "-"),
+      smoke.best(neardup(plain1, 101)) // warm
+      val a = smoke.best(neardup(plain1, 101))
+      val b = smoke.best(neardup(plain10, 1010))
+      val mm6Row = decade("mm6_image_neardup[groupMod 101->1010]", a, b) ++ Map(
+        "peak_per_part1_mb" -> mb(a._4 / 32), "peak_per_part10_mb" -> mb(b._4 / 32),
         "dispatch1" -> "-", "dispatch10" -> "-")
       println(s"[scale] ${mm6Row("query")} 1x=${mm6Row("t1_sec")}s " +
         s"10x=${mm6Row("t10_sec")}s factor=${mm6Row("wall_factor")} " +
-        s"rows $r1->$r10 peak/part ${mm6Row("peak_per_part1_mb")}->" +
+        s"rows ${a._2}->${b._2} peak/part ${mm6Row("peak_per_part1_mb")}->" +
         s"${mm6Row("peak_per_part10_mb")} MB")
 
       // mm8's serve path: a FIXED 5k-item batch deduped against the
@@ -516,22 +411,16 @@ object ScaleSmoke {
       def serve(idx: String, groupMod: Int): () => DataFrame = () =>
         Dedup.incrementalHammingDedup(
           batchSigs(groupMod), spark.read.parquet(idx), 64, 3)
-      runDf(serve(idx1, 101)) // warm
-      val (st1, sr1, ss1, sp1) = runDf(serve(idx1, 101))
-      val (st10, sr10, ss10, sp10) = runDf(serve(idx10, 1010))
-      val mm8Row = Map(
-        "query" -> "mm8_index_serve[5k batch, index 50k->500k]",
-        "t1_sec" -> f"$st1%.2f", "t10_sec" -> f"$st10%.2f",
-        "wall_factor" -> f"${st10 / st1}%.1f",
-        "rows1" -> s"$sr1 (idx $idx1Rows)", "rows10" -> s"$sr10 (idx $idx10Rows)",
-        "shuffle1_mb" -> mb(ss1), "shuffle10_mb" -> mb(ss10),
-        "peak_stage1_mb" -> mb(sp1), "peak_stage10_mb" -> mb(sp10),
-        "peak_per_part1_mb" -> mb(sp1 / 32), "peak_per_part10_mb" -> mb(sp10 / 32),
-        "shuffle_factor" -> (if (ss1 > 0) f"${ss10.toDouble / ss1}%.1f" else "-"),
+      smoke.best(serve(idx1, 101)) // warm
+      val sa = smoke.best(serve(idx1, 101))
+      val sb = smoke.best(serve(idx10, 1010))
+      val mm8Row = decade("mm8_index_serve[5k batch, index 50k->500k]", sa, sb) ++ Map(
+        "rows1" -> s"${sa._2} (idx $idx1Rows)", "rows10" -> s"${sb._2} (idx $idx10Rows)",
+        "peak_per_part1_mb" -> mb(sa._4 / 32), "peak_per_part10_mb" -> mb(sb._4 / 32),
         "dispatch1" -> "-", "dispatch10" -> "-")
       println(s"[scale] ${mm8Row("query")} 1x=${mm8Row("t1_sec")}s " +
         s"10x=${mm8Row("t10_sec")}s factor=${mm8Row("wall_factor")} " +
-        s"survivors $sr1->$sr10 peak/part ${mm8Row("peak_per_part1_mb")}->" +
+        s"survivors ${sa._2}->${sb._2} peak/part ${mm8Row("peak_per_part1_mb")}->" +
         s"${mm8Row("peak_per_part10_mb")} MB")
       Seq(mm6Row, mm8Row)
     }
@@ -557,7 +446,7 @@ object ScaleSmoke {
         val t1 = System.nanoTime()
         Similarity.saveIvfPq(idx, path)
         val tEncode = (System.nanoTime() - t1) / 1e9
-        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+        smoke.drain()
         val encodePeak = meter.peak.get
         val appendBatch = rotated(11).limit(5000)
         val t2 = System.nanoTime()
@@ -589,15 +478,8 @@ object ScaleSmoke {
       Seq(row)
     }
 
-    val json = (results ++ skewResults30 ++ leakageResults ++ eventResults ++ annResults ++ zorderResults ++ mmResults ++ annBuildResults).map(r => r.map { case (k, v) =>
-      "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}"))
-      .mkString(s"""{"sf":"$sfDir","copies":$copies,"results":[""", ",", "]}")
-    java.nio.file.Files.write(java.nio.file.Paths.get("scale_smoke.json"),
-      json.getBytes("UTF-8"))
-    println(json)
-
-    // best-effort cleanup of the synthesized corpora
-    graft.util.Fs.deleteTree(work)
-    spark.stop()
+    smoke.finish("scale_smoke.json", s""""sf":"$sfDir","copies":$copies""",
+      results ++ skewResults30 ++ leakageResults ++ eventResults ++ annResults ++
+        zorderResults ++ mmResults ++ annBuildResults)
   }
 }

@@ -1,9 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
+import graft.tools.Smoke.{decade, mb}
 
 /** 10× scale smoke for the SEMANTIC-LAYER path itself — the one flagship
   * family without a measured decade (SCALE_SMOKE.md covers dedup, curation,
@@ -51,23 +52,8 @@ import graft.SparkEntry
 object SemanticScaleSmoke {
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val meter = new SmokeMeter
-    spark.sparkContext.addSparkListener(meter)
-
-    val work = java.nio.file.Files.createTempDirectory("graft_semscale_").toString
+    val smoke = new Smoke("graft_semscale_")
+    import smoke.{copies, sfDir, spark, work}
 
     // Key shifts per copy: orderkey stride 10⁸, entity keys stride 10⁷ — both
     // far above the sf0.1 key ranges (o_orderkey < 10⁶), so copies never collide.
@@ -106,19 +92,6 @@ object SemanticScaleSmoke {
     val suites = Seq("tpch_q1", "tpch_q3", "tpch_q9", "tpch_q18", "tpch_q21",
       "m3_calc_to_many", "m13_cube", "m6_rlac")
 
-    def timed(name: String, dir: String): (Double, Long, Long, Long) = {
-      var best = Double.MaxValue; var rows = 0L; var shuffle = 0L; var peak = 0L
-      for (_ <- 0 until runs) {
-        spark.catalog.clearCache()
-        meter.reset()
-        val t0 = System.nanoTime()
-        rows = SparkEntry.queries(name)(spark, dir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-        if (dt < best) { best = dt; shuffle = meter.total.get; peak = meter.peak.get }
-      }
-      (best, rows, shuffle, peak)
-    }
     /** Untimed executed-plan read: collect() drives the query's OWN
       * QueryExecution to completion so AdaptiveSparkPlan reports the FINAL
       * join strategies, not the initial static plan.
@@ -132,24 +105,17 @@ object SemanticScaleSmoke {
         s"${n("ShuffledHashJoin")}shj"
     }
 
-    suites.foreach(timed(_, x1)) // warm codegen/JIT + deploy caches
-    def mb(b: Long): String = f"${b / 1e6}%.1f"
+    suites.foreach(smoke.entry(_, x1)) // warm codegen/JIT + deploy caches
     val results = suites.map { name =>
-      val (t1, r1, s1, p1) = timed(name, x1)
+      val a = smoke.entry(name, x1)
       val mix1 = joinMix(name, x1)
-      val (t10, r10, s10, p10) = timed(name, x10)
+      val b = smoke.entry(name, x10)
       val mix10 = joinMix(name, x10)
-      val row = Map(
-        "query" -> name, "t1_sec" -> f"$t1%.2f", "t10_sec" -> f"$t10%.2f",
-        "wall_factor" -> f"${t10 / t1}%.1f",
-        "rows1" -> r1.toString, "rows10" -> r10.toString,
-        "shuffle1_mb" -> mb(s1), "shuffle10_mb" -> mb(s10),
-        "peak_stage1_mb" -> mb(p1), "peak_stage10_mb" -> mb(p10),
-        "peak_per_part1_mb" -> mb(p1 / 32), "peak_per_part10_mb" -> mb(p10 / 32),
-        "shuffle_factor" -> (if (s1 > 0) f"${s10.toDouble / s1}%.1f" else "-"),
+      val row = decade(name, a, b) ++ Map(
+        "peak_per_part1_mb" -> mb(a._4 / 32), "peak_per_part10_mb" -> mb(b._4 / 32),
         "join_mix1" -> mix1, "join_mix10" -> mix10)
       println(s"[semscale] $name 1x=${row("t1_sec")}s 10x=${row("t10_sec")}s " +
-        s"factor=${row("wall_factor")} rows ${r1}->${r10} " +
+        s"factor=${row("wall_factor")} rows ${a._2}->${b._2} " +
         s"shuffle ${row("shuffle1_mb")}->${row("shuffle10_mb")} MB " +
         s"peak ${row("peak_stage1_mb")}->${row("peak_stage10_mb")} MB " +
         s"joins ${mix1}->${mix10}")
@@ -165,20 +131,14 @@ object SemanticScaleSmoke {
     val results30 = {
       val x30 = synth("x30", 3 * copies)
       Seq("tpch_q18", "tpch_q21").map { name =>
-        val (t10, r10, s10, p10) = timed(name, x10)
+        val (t10, r10, s10, p10) = smoke.entry(name, x10)
         spark.conf.set("spark.sql.shuffle.partitions", "96")
         val (t30, r30, s30, p30) =
-          try timed(name, x30)
+          try smoke.entry(name, x30)
           finally spark.conf.set("spark.sql.shuffle.partitions", "32")
-        val row = Map(
-          "query" -> s"$name[10x/32p -> 30x/96p]",
-          "t1_sec" -> f"$t10%.2f", "t10_sec" -> f"$t30%.2f",
-          "wall_factor" -> f"${t30 / t10}%.1f",
-          "rows1" -> r10.toString, "rows10" -> r30.toString,
-          "shuffle1_mb" -> mb(s10), "shuffle10_mb" -> mb(s30),
-          "peak_stage1_mb" -> mb(p10), "peak_stage10_mb" -> mb(p30),
+        val row = decade(s"$name[10x/32p -> 30x/96p]",
+          (t10, r10, s10, p10), (t30, r30, s30, p30)) ++ Map(
           "peak_per_part1_mb" -> mb(p10 / 32), "peak_per_part10_mb" -> mb(p30 / 96),
-          "shuffle_factor" -> (if (s10 > 0) f"${s30.toDouble / s10}%.1f" else "-"),
           "join_mix1" -> "-", "join_mix10" -> "-")
         println(s"[semscale] ${row("query")} 10x=${row("t1_sec")}s " +
           s"30x=${row("t10_sec")}s factor=${row("wall_factor")} " +
@@ -199,22 +159,16 @@ object SemanticScaleSmoke {
     val results100 = if (sys.env.get("SPARK_GRAFT_SCALE_100X").contains("1")) {
       val x100 = synth("x100", 10 * copies)
       Seq("tpch_q18", "tpch_q21").map { name =>
-        val (t10, r10, s10, p10) = timed(name, x10)
+        val (t10, r10, s10, p10) = smoke.entry(name, x10)
         spark.conf.set("spark.sql.shuffle.partitions", "320")
         val (t100, r100, s100, p100, mix100) =
           try {
-            val (t, r, s, p) = timed(name, x100)
+            val (t, r, s, p) = smoke.entry(name, x100)
             (t, r, s, p, joinMix(name, x100))
           } finally spark.conf.set("spark.sql.shuffle.partitions", "32")
-        val row = Map(
-          "query" -> s"$name[10x/32p -> 100x/320p]",
-          "t1_sec" -> f"$t10%.2f", "t10_sec" -> f"$t100%.2f",
-          "wall_factor" -> f"${t100 / t10}%.1f",
-          "rows1" -> r10.toString, "rows10" -> r100.toString,
-          "shuffle1_mb" -> mb(s10), "shuffle10_mb" -> mb(s100),
-          "peak_stage1_mb" -> mb(p10), "peak_stage10_mb" -> mb(p100),
+        val row = decade(s"$name[10x/32p -> 100x/320p]",
+          (t10, r10, s10, p10), (t100, r100, s100, p100)) ++ Map(
           "peak_per_part1_mb" -> mb(p10 / 32), "peak_per_part10_mb" -> mb(p100 / 320),
-          "shuffle_factor" -> (if (s10 > 0) f"${s100.toDouble / s10}%.1f" else "-"),
           "join_mix1" -> "-", "join_mix10" -> mix100)
         println(s"[semscale] ${row("query")} 10x=${row("t1_sec")}s " +
           s"100x=${row("t10_sec")}s factor=${row("wall_factor")} " +
@@ -225,14 +179,7 @@ object SemanticScaleSmoke {
       }
     } else Nil
 
-    val json = (results ++ results30 ++ results100).map(r => r.map { case (k, v) =>
-      "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}"))
-      .mkString(s"""{"sf":"$sfDir","copies":$copies,"results":[""", ",", "]}")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("semantic_scale_smoke.json"), json.getBytes("UTF-8"))
-    println(json)
-
-    graft.util.Fs.deleteTree(work)
-    spark.stop()
+    smoke.finish("semantic_scale_smoke.json", s""""sf":"$sfDir","copies":$copies""",
+      results ++ results30 ++ results100)
   }
 }

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
-/** Stage-granular shuffle meter shared by the scale-smoke mains: total bytes
+/** Stage-granular shuffle meter shared by the scale smokes and [[Probe]]: total bytes
   * written across stages and the single largest stage — the peak is what
   * bounds executor/disk pressure at a fixed partition count.
   */

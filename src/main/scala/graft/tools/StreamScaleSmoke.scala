@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -44,19 +43,11 @@ object StreamScaleSmoke {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark: SparkSession = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val smoke = new Smoke("graft_ssmoke_")
+    import smoke.{sfDir, spark, work}
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val work = java.nio.file.Files.createTempDirectory("graft_ssmoke_").toString
     val results = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
 
     def report(name: String, scaleTag: String, walls: Seq[Double],
@@ -141,7 +132,7 @@ object StreamScaleSmoke {
 
     // ---- entity-resolution linkage stream: distinct record slices per batch --
     // Catalog state grows by ~a batch of new entities per batch (names are made
-    // distinct across synthesized copies, the ScaleSmoke salt pattern), so the
+    // distinct across synthesized copies, the Smoke.salted pattern), so the
     // 10× run's last batches link against a 10× catalog — the honest per-batch
     // cost is O(batch + catalog scan); `state_rows` reports the catalog size.
     def runErLink(tag: String, batches: Int): Unit = {
@@ -212,13 +203,6 @@ object StreamScaleSmoke {
     if (want("neardup")) { runNearDup("1x", 10); runNearDup("10x", 100) }
     if (want("er")) { runErLink("1x", 10); runErLink("10x", 100) }
 
-    val json = results.map(_.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-        .mkString("{", ",", "}"))
-      .mkString(s"""{"sf":"$sfDir","results":[""", ",", "]}")
-    java.nio.file.Files.write(java.nio.file.Paths.get("stream_scale_smoke.json"),
-      json.getBytes("UTF-8"))
-    println(json)
-    graft.util.Fs.deleteTree(work)
-    spark.stop()
+    smoke.finish("stream_scale_smoke.json", s""""sf":"$sfDir"""", results.toSeq)
   }
 }

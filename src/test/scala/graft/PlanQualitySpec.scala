@@ -139,12 +139,14 @@ class PlanQualitySpec extends AnyFunSuite {
     // Now per column: a map-combinable stats aggregate crossed with a
     // value-only distinct count — no Expand, bare values on the distinct
     // exchange, and every scan prunes to exactly its own column (two scans per
-    // column: stats + distinct; tools.ProfileShapes carries the 10x evidence).
+    // column: stats + distinct; OPTIMIZATION_r16.md §8 and
+    // plans/r16/q28_profile_{before,after}.txt carry the 10x evidence).
     val plan = executedPlan("q28_profile")
     assert(!plan.contains("Expand"),
       s"exact-distinct profile must not plan through Expand\n${plan.take(2500)}")
-    // two pruned scans per profiled column (4 columns in the q28 entry)
-    assert("lineitem\\.parquet".r.findAllIn(plan).size == 8,
+    // two pruned scans per profiled column (4 columns in the q28 entry: 8)
+    val expectedScans = 2 * graft.queries.Relational.q28ProfileColumns.size
+    assert("lineitem\\.parquet".r.findAllIn(plan).size == expectedScans,
       s"expected two pruned lineitem scans per profiled column\n${plan.take(2500)}")
     // each scan reads a single column: every ReadSchema has exactly one field
     val schemas = "ReadSchema: struct<[^>]*>".r.findAllIn(plan).toSeq

@@ -4,16 +4,6 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (Spark startup dominates test time). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = SessionFactory.local(4)
   val sfDir = "/root/testdata/sf0.001"
 }
